@@ -24,6 +24,20 @@ Behavioral contract (from the reference, cited per method):
   (`lib/nats.js:117-119,164-166`); bad arguments raise
   `BAD_SUBJECT` / `BAD_MSG` (`lib/nats.js:15-23,167-172`).
 
+Dispatch does constant work per message once a channel has been seen:
+- Routes are cached: ``_routes`` maps a channel to the tuple of sids whose
+  patterns match it, filled by the reference's linear `matches` scan on
+  the channel's first message. ``subscribe`` clears the cache (a new
+  pattern may match cached channels); ``unsubscribe`` and the ``max``
+  bound leave it alone, because a removed sid is skipped when
+  ``subs.get(sid)`` finds nothing. The cache is also reset when it holds
+  ``ROUTE_CACHE_MAX`` channels. Delivery order is sid order, and a
+  subscription added during a callback sees the next message, not the
+  current one, exactly as with a fresh scan.
+- A callback's arity is resolved once, at ``subscribe``.
+Both rest on ``subs`` being changed only through ``subscribe`` and
+``unsubscribe`` (and the ``max`` bookkeeping of dispatch itself).
+
 The engine side is unchanged by this module — `filter_channel`,
 `bounded_subscription`, `rpc_first_response` et al. are the set-based
 twins of these per-message semantics (tests/test_semantics.py pins both
@@ -33,6 +47,7 @@ the core-NATS TCP / spool transports in `sources/nats.py`.
 
 from __future__ import annotations
 
+import inspect
 import time
 from collections.abc import Callable
 from typing import Any
@@ -54,21 +69,20 @@ from . import __version__ as version  # noqa: F401
 
 DEFAULT_TOPIC = "cdc.client"
 RPC_TIMEOUT_S = 10  # lib/nats.js:238-239 (seconds)
+ROUTE_CACHE_MAX = 4096  # distinct channels cached before the cache is reset
 
 
-def _invoke(cb: Callable, msg: dict, subject: str, sid: int) -> None:
-    """Deliver with the reference's callback signature
-    ``(cdcMsg, subject, sid)`` (`lib/nats.js:109-111`). JS ignores extra
-    arguments automatically; Python cannot, so the callback receives the
-    first ``n`` of (msg, subject, sid) for its declared arity — one- and
-    two-parameter callbacks are both legal in the reference."""
-    import inspect
-
+def _arity(cb: Callable | None) -> int:
+    """How many of ``(cdcMsg, subject, sid)`` a callback receives — the
+    reference's callback signature (`lib/nats.js:109-111`). JS ignores
+    extra arguments automatically; Python cannot, so the callback gets the
+    first ``n`` for its declared arity: one- and two-parameter callbacks
+    are both legal in the reference. Resolved once per subscription."""
     try:
         n = len(inspect.signature(cb).parameters)
     except (TypeError, ValueError):
         n = 3
-    cb(*(msg, subject, sid)[: max(1, min(n, 3))])
+    return max(1, min(n, 3))
 
 
 class LocalBroker:
@@ -173,6 +187,7 @@ class CdcNats(EventEmitter):
         self._closed = False
         self.ssid = -1                     # lib/nats.js:52 (first sid is 0)
         self.subs: dict[int, dict] = {}    # lib/nats.js:52
+        self._routes: dict[str, tuple[int, ...]] = {}  # channel -> sids
         broker.subscribe(topic, self._process_msg)
 
     # -- lifecycle -------------------------------------------------------------
@@ -187,6 +202,7 @@ class CdcNats(EventEmitter):
             self.removeAllListeners()      # lib/nats.js:71
         self.ssid = -1                     # lib/nats.js:72
         self.subs = None                   # lib/nats.js:73
+        self._routes = {}
 
     def process_err(self, error: Exception | str) -> None:
         """Transport-error hook (`lib/nats.js:82-84`): wrap and emit as an
@@ -217,7 +233,13 @@ class CdcNats(EventEmitter):
             opts = opts_or_cb
         self.ssid += 1
         sid = self.ssid
-        self.subs[sid] = {"subject": subject, "callback": callback, "received": 0}
+        self.subs[sid] = {
+            "subject": subject,
+            "callback": callback,
+            "arity": _arity(callback),
+            "received": 0,
+        }
+        self._routes.clear()  # the new pattern may match cached channels
         # Emit BEFORE arming max — the reference's order (lib/nats.js:137
         # precedes the `if (max)` at :139).
         self.emit("subscribe", sid, subject, opts_or_cb if isinstance(opts_or_cb, dict) else None)
@@ -261,12 +283,23 @@ class CdcNats(EventEmitter):
 
     # -- dispatch --------------------------------------------------------------
     def _process_msg(self, message: bytes) -> None:
-        """Decode + linear registry scan with MQTT match + counter/max
-        bookkeeping (`lib/nats.js:86-113`)."""
+        """Decode + registry scan with MQTT match + counter/max bookkeeping
+        (`lib/nats.js:86-113`). The scan runs once per channel and is
+        cached (see the module docstring); sids removed since are skipped."""
         cdc_msg = decode_cdcmsg(message)
-        for sid in list(self.subs):
+        channel = cdc_msg["channel"]
+        sids = self._routes.get(channel)
+        if sids is None:
+            sids = tuple(
+                sid for sid, sub in self.subs.items()
+                if matches(sub["subject"], channel)
+            )
+            if len(self._routes) >= ROUTE_CACHE_MAX:
+                self._routes.clear()
+            self._routes[channel] = sids
+        for sid in sids:
             sub = self.subs.get(sid)
-            if sub is None or not matches(sub["subject"], cdc_msg["channel"]):
+            if sub is None:
                 continue
             sub["received"] += 1
             if "max" in sub:
@@ -278,8 +311,9 @@ class CdcNats(EventEmitter):
                     # (lib/nats.js:104), which emits if still present.
                     self.unsubscribe(sid)
                     sub["callback"] = None
-            if sub["callback"] is not None:
-                _invoke(sub["callback"], cdc_msg, sub["subject"], sid)
+            cb = sub["callback"]
+            if cb is not None:
+                cb(*(cdc_msg, sub["subject"], sid)[: sub["arity"]])
 
     # -- RPC -------------------------------------------------------------------
     def rpc(

@@ -17,7 +17,11 @@ byte-stable for hashing.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
+import sys
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import Column
 
 # (field_number, name, kind) in examples/cdc-pub.js:31-40 declaration order.
 FIELDS = (
@@ -90,8 +94,16 @@ def encode_cdcmsg(
     return bytes(out)
 
 
+# num -> (name, kind), built once: decode runs once per delivered message.
+_BY_NUM = {num: (name, kind) for num, name, kind in FIELDS}
+
+
 def decode_cdcmsg(data: bytes) -> dict:
-    """Decode protobuf wire bytes into a CDCMsg dict (defaults filled)."""
+    """Decode protobuf wire bytes into a CDCMsg dict (defaults filled).
+
+    String fields are interned: channels (and publishers, content types)
+    come from a small set, so every decoded message shares one string per
+    distinct value instead of holding a fresh copy."""
     msg = {
         "publisher": "",
         "channel": "",
@@ -102,35 +114,38 @@ def decode_cdcmsg(data: bytes) -> dict:
         "retain": False,
         "payload": b"",
     }
-    by_num = {num: (name, kind) for num, name, kind in FIELDS}
+    by_num, intern = _BY_NUM, sys.intern
     i, n = 0, len(data)
-
-    def varint() -> int:
-        nonlocal i
-        shift = res = 0
-        while True:
+    while i < n:
+        b = data[i]
+        i += 1
+        key = b & 0x7F
+        shift = 7
+        while b & 0x80:
             b = data[i]
             i += 1
-            res |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return res
+            key |= (b & 0x7F) << shift
             shift += 7
-
-    while i < n:
-        key = varint()
-        num, wtype = key >> 3, key & 0x07
-        if wtype == 0:
-            val = varint()
-        elif wtype == 2:
-            ln = varint()
-            val = data[i : i + ln]
-            i += ln
+        wtype = key & 0x07
+        if wtype == 0 or wtype == 2:
+            b = data[i]
+            i += 1
+            val = b & 0x7F
+            shift = 7
+            while b & 0x80:
+                b = data[i]
+                i += 1
+                val |= (b & 0x7F) << shift
+                shift += 7
+            if wtype == 2:  # val is the length
+                val, i = data[i : i + val], i + val
         else:  # unknown wire type: stop rather than misparse
             raise ValueError(f"unsupported wire type {wtype}")
-        if num in by_num:
-            name, kind = by_num[num]
+        field = by_num.get(key >> 3)
+        if field is not None:
+            name, kind = field
             if kind == "str":
-                msg[name] = val.decode("utf-8")
+                msg[name] = intern(val.decode("utf-8"))
             elif kind == "bytes":
                 msg[name] = bytes(val)
             elif kind == "bool":
@@ -142,6 +157,7 @@ def decode_cdcmsg(data: bytes) -> dict:
 
 def decode_col(col: Column) -> Column:
     """Arrow-vectorized CDCMsg decode of a binary column → struct column."""
+    from pyspark.sql import functions as F
 
     @F.pandas_udf(DECODED_SCHEMA)
     def _decode(series):
@@ -210,6 +226,7 @@ def decode_col(col: Column) -> Column:
 def encode_col(struct: Column) -> Column:
     """Arrow-vectorized CDCMsg encode of a struct column → binary column.
     The struct must carry the eight envelope fields by name."""
+    from pyspark.sql import functions as F
 
     @F.pandas_udf("binary")
     def _encode(pdf):

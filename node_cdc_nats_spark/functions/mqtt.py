@@ -22,8 +22,10 @@ predicate per subscription.
 from __future__ import annotations
 
 import re
+from typing import TYPE_CHECKING
 
-from pyspark.sql import Column, functions as F
+if TYPE_CHECKING:
+    from pyspark.sql import Column
 
 
 def mqtt_to_regex(pattern: str) -> str:
@@ -72,6 +74,8 @@ def channel_matches(channel: Column | str, pattern: str) -> Column:
 
     Plain literal patterns (no wildcard) compile to an equality comparison so
     Catalyst can push an exact parquet filter instead of a regex."""
+    from pyspark.sql import functions as F
+
     col = F.col(channel) if isinstance(channel, str) else channel
     if "+" not in pattern and "#" not in pattern:
         return col == F.lit(pattern)
@@ -166,6 +170,8 @@ def channel_params(channel: Column | str, pattern: str) -> Column:
     one ``string`` field per ``+name``, one ``array<string>`` field per
     ``#name`` (the remainder, split on '/'). Pure regexp_extract — stays
     inside whole-stage codegen, no Python in the hot path."""
+    from pyspark.sql import functions as F
+
     col = F.col(channel) if isinstance(channel, str) else channel
     regex, captures = _capture_regex(pattern)
     if not captures:

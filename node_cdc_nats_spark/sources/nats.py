@@ -50,8 +50,10 @@ sys.path (driver contract).
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
 
 # Reference error codes, lib/nats.js:15-23. BAD_JSON and INVALID_ENCODING
 # are defined-but-never-raised in the reference as well — they exist so a
@@ -201,7 +203,11 @@ class NatsClient:
         for sid, subject in self._subs.items():
             sock.sendall(f"SUB {subject} {sid}\r\n".encode())
         self._sock = sock
-        self._buf = buf
+        # Receive buffer and read offset: lines and payloads are consumed by
+        # advancing _pos; the consumed prefix is dropped once per recv, so
+        # parsing a chunk is linear in its size.
+        self._buf = bytearray(buf)
+        self._pos = 0
         self._gen += 1
 
     def _redial(self, cause: Exception) -> None:
@@ -243,9 +249,13 @@ class NatsClient:
             self._redial(exc)
             return  # partial pre-outage bytes are dropped with the socket
         if not chunk:
-            self._buf = b""
+            self._buf = bytearray()
+            self._pos = 0
             self._redial(NatsError("connection closed", CONN_CLOSED))
             return
+        if self._pos:
+            del self._buf[: self._pos]
+            self._pos = 0
         self._buf += chunk
 
     def _read_line(self) -> bytes:
@@ -253,12 +263,17 @@ class NatsClient:
         # resets _buf to the fresh stream's post-INFO remainder, which
         # starts at a protocol-line boundary, so the partial old line is
         # dropped wholesale and parsing stays synchronized.
-        while b"\r\n" not in self._buf:
+        end = self._buf.find(b"\r\n", self._pos)
+        while end < 0:
             self._recv_more()
-        line, self._buf = self._buf.split(b"\r\n", 1)
+            end = self._buf.find(b"\r\n", self._pos)
+        line = bytes(self._buf[self._pos : end])
+        self._pos = end + 2
         return line
 
-    def _read_n(self, n: int) -> bytes:
+    def _read_payload(self, n: int) -> bytes:
+        """The ``n`` payload bytes of a MSG frame; its trailing CRLF is
+        skipped."""
         # Unlike _read_line, payload reads are NOT self-synchronizing: after
         # a redial the fresh buffer holds NEW protocol bytes (MSG headers,
         # PINGs), and treating them as the old payload's remainder would
@@ -266,12 +281,13 @@ class NatsClient:
         # generation counter and abort the torn frame; next_msg restarts at
         # a clean line boundary.
         gen = self._gen
-        while len(self._buf) < n:
+        while len(self._buf) - self._pos < n + 2:
             self._recv_more()
             if self._gen != gen:
                 raise _Reconnected()
-        out, self._buf = self._buf[:n], self._buf[n:]
-        return out
+        start = self._pos
+        self._pos = start + n + 2
+        return bytes(self._buf[start : start + n])
 
     def publish(self, subject: str, msg: bytes) -> None:
         # Validation order mirrors lib/nats.js:163-172.
@@ -294,9 +310,9 @@ class NatsClient:
 
         A reconnect mid-message drops the torn frame and resumes on the
         fresh socket: _read_line resynchronizes from the reset buffer, and
-        a redial inside _read_n raises _Reconnected, caught here to restart
-        frame parsing at the clean line boundary (core NATS is at-most-once,
-        so the torn message is legitimately gone)."""
+        a redial inside _read_payload raises _Reconnected, caught here to
+        restart frame parsing at the clean line boundary (core NATS is
+        at-most-once, so the torn message is legitimately gone)."""
         while True:
             try:
                 line = self._read_line()
@@ -305,10 +321,7 @@ class NatsClient:
                     continue
                 if line.startswith(b"MSG"):
                     parts = line.decode().split(" ")
-                    nbytes = int(parts[-1])
-                    payload = self._read_n(nbytes)
-                    self._read_n(2)  # trailing \r\n
-                    return parts[1], payload
+                    return parts[1], self._read_payload(int(parts[-1]))
             except _Reconnected:
                 continue  # torn frame dropped; buffer is at a line boundary
             if line.startswith(b"-ERR"):
@@ -885,11 +898,14 @@ def _make_datasource_cls():
                                 cache[v] = s
                             ap(s)
                     else:
+                        # Gate on int(v), as encode_cdcmsg does: a value
+                        # like 0.5 is truthy but encodes as 0, which
+                        # protobuf omits.
                         hdr = varint_bytes((num << 3) | 0)
-                        seg = [
-                            hdr + varint_bytes(int(v)) if v else b""
-                            for v in col
-                        ]
+                        seg = []
+                        for v in col:
+                            iv = int(v) if v is not None else 0
+                            seg.append(hdr + varint_bytes(iv) if iv else b"")
                     segs.append(seg)
                 for parts in zip(*segs):
                     yield b"".join(parts)

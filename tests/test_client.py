@@ -8,6 +8,8 @@ from __future__ import annotations
 import pytest
 
 from node_cdc_nats_spark.client import CdcNats, LocalBroker, connect, make_envelope
+from node_cdc_nats_spark.functions.cdcmsg import decode_cdcmsg
+from node_cdc_nats_spark.functions.mqtt import matches
 from node_cdc_nats_spark.sources.nats import (
     BAD_MSG,
     BAD_SUBJECT,
@@ -565,3 +567,210 @@ def test_graph_quality_example_runs(spark):
         "modularity_q_micro": 0,
         "kcore_nodes": 0,
     }
+
+
+# -- hot-path rewrites against the per-delivery behavior they replaced -------
+def _legacy_args(cb, msg, subject, sid) -> tuple:
+    """The arguments a callback got when its arity was resolved at every
+    delivery with inspect.signature."""
+    import inspect
+
+    try:
+        n = len(inspect.signature(cb).parameters)
+    except (TypeError, ValueError):
+        n = 3
+    return (msg, subject, sid)[: max(1, min(n, 3))]
+
+
+def test_callback_arity_resolved_once_matches_per_delivery_rule():
+    import functools
+
+    got: dict[str, tuple] = {}
+
+    def four(tag, m, subj, s):
+        got[tag] = (m, subj, s)
+
+    def varargs(*args):
+        got["varargs"] = args
+
+    class Handler:
+        def on(self, m, subj):
+            got["method"] = (m, subj)
+
+        def __call__(self, m, subj, s):
+            got["object"] = (m, subj, s)
+
+    class NoSignature:
+        __signature__ = "unavailable"  # inspect.signature raises TypeError
+
+        def __call__(self, *args):
+            got["no_signature"] = args
+
+    appended: list = []
+    callbacks = {
+        "one": (lambda m: got.__setitem__("one", (m,)), 1),
+        "two": (lambda m, subj: got.__setitem__("two", (m, subj)), 2),
+        "three": (lambda m, subj, s: got.__setitem__("three", (m, subj, s)), 3),
+        "four_params": (
+            lambda m, subj, s, extra=None: got.__setitem__("four_params", (m, subj, s)), 3,
+        ),
+        "varargs": (varargs, 1),
+        "partial": (functools.partial(four, "partial"), 3),
+        "method": (Handler().on, 2),
+        "append": (appended.append, 1),
+        "object": (Handler(), 3),
+        "no_signature": (NoSignature(), 3),
+    }
+    nats = connect()
+    sids = {tag: nats.subscribe(f"{tag}/#", cb) for tag, (cb, _) in callbacks.items()}
+    for tag in callbacks:
+        nats.publish("x", env(f"{tag}/z"))
+    got["append"] = tuple(appended)
+    for tag, (cb, n) in callbacks.items():
+        msg = got[tag][0]
+        assert msg["channel"] == f"{tag}/z"
+        assert got[tag] == (msg, f"{tag}/#", sids[tag])[:n], tag
+        assert got[tag] == _legacy_args(cb, msg, f"{tag}/#", sids[tag]), tag
+
+
+class FreshScanNats(CdcNats):
+    """Reference dispatcher: the linear matches() scan over every
+    subscription for every message, and the callback arity resolved at
+    every delivery — the dispatch before routes were cached."""
+
+    def _process_msg(self, message: bytes) -> None:
+        cdc_msg = decode_cdcmsg(message)
+        for sid in list(self.subs):
+            sub = self.subs.get(sid)
+            if sub is None or not matches(sub["subject"], cdc_msg["channel"]):
+                continue
+            sub["received"] += 1
+            if "max" in sub:
+                if sub["received"] == sub["max"]:
+                    del self.subs[sid]
+                    self.emit("unsubscribe", sid, sub["subject"])
+                elif sub["received"] > sub["max"]:
+                    self.unsubscribe(sid)
+                    sub["callback"] = None
+            if sub["callback"] is not None:
+                cb = sub["callback"]
+                cb(*_legacy_args(cb, cdc_msg, sub["subject"], sid))
+
+
+_PATTERNS = ("#", "a/#", "a/+", "+/b", "a/b", "+/+", "a/+/c", "+/+/#", "b/#", "x", "+name/b")
+_CHANNELS = ("a", "a/b", "a/c", "b/b", "a/b/c", "a/x/c", "x", "b", "a/")
+
+
+def _run_script(cls, seed: int) -> list:
+    """Random subscribe/unsubscribe/max/publish interleavings, with
+    callbacks that subscribe, unsubscribe and re-publish while a message
+    is being delivered. Returns everything observable, in order."""
+    import random
+
+    rng = random.Random(seed)
+    nats = cls(LocalBroker())
+    log: list = []
+    nats.on("subscribe", lambda sid, subject, opts: log.append(("subscribe", sid, subject, opts)))
+    nats.on("unsubscribe", lambda sid, subject: log.append(("unsubscribe", sid, subject)))
+    depth = [0]
+
+    def delivered(tag, args):
+        log.append(("callback", tag, args[0]["channel"], args[0]["payload"], args[1:]))
+        r = rng.random()
+        if r < 0.12:
+            subscribe()
+        elif r < 0.24:
+            unsubscribe()
+        elif r < 0.3 and depth[0] < 2:
+            publish()
+
+    def subscribe():
+        if len(nats.subs) >= 12:  # bounds the fan-out of nested publishes
+            return
+        tag = len(log)
+        arity = rng.choice((1, 2, 3))
+        cb = (
+            (lambda m: delivered(tag, (m,))),
+            (lambda m, subj: delivered(tag, (m, subj))),
+            (lambda m, subj, s: delivered(tag, (m, subj, s))),
+        )[arity - 1]
+        pattern = rng.choice(_PATTERNS)
+        if rng.random() < 0.4:
+            nats.subscribe(pattern, {"max": rng.randint(0, 4)}, cb)
+        else:
+            nats.subscribe(pattern, cb)
+
+    def unsubscribe():
+        sid = rng.randint(0, nats.ssid + 1)
+        if rng.random() < 0.5:
+            nats.unsubscribe(sid)
+        else:
+            nats.unsubscribe(sid, rng.randint(0, 4))
+
+    def publish():
+        depth[0] += 1
+        nats.publish("x", env(rng.choice(_CHANNELS), str(len(log)).encode()))
+        depth[0] -= 1
+
+    for _ in range(200):
+        rng.choice((subscribe, unsubscribe, publish, publish, publish))()
+    log.append(("received", {sid: sub["received"] for sid, sub in nats.subs.items()}))
+    return log
+
+
+@pytest.mark.parametrize("cache_max", [None, 2])
+def test_route_cache_agrees_with_fresh_scan(monkeypatch, cache_max):
+    from node_cdc_nats_spark import client
+
+    if cache_max is not None:
+        monkeypatch.setattr(client, "ROUTE_CACHE_MAX", cache_max)
+    kinds: set = set()
+    for seed in range(25):
+        cached = _run_script(CdcNats, seed)
+        assert cached == _run_script(FreshScanNats, seed), seed
+        kinds.update(entry[0] for entry in cached)
+    assert kinds == {"subscribe", "unsubscribe", "callback", "received"}
+
+
+def test_route_cache_is_filled_once_per_channel_until_subscribe(monkeypatch):
+    from node_cdc_nats_spark import client
+
+    scans: list[str] = []
+    match = client.matches
+
+    def counting(pattern, topic):
+        scans.append(topic)
+        return match(pattern, topic)
+
+    monkeypatch.setattr(client, "matches", counting)
+    nats = connect()
+    seen: list[str] = []
+    nats.subscribe("a/+", lambda m: seen.append(m["channel"]))
+    nats.subscribe("b/#", lambda m: seen.append(m["channel"]))
+    for ch in ("a/1", "a/1", "b/2", "a/1", "b/2"):
+        nats.publish("x", env(ch))
+    assert seen == ["a/1", "a/1", "b/2", "a/1", "b/2"]
+    assert scans == ["a/1", "a/1", "b/2", "b/2"]  # one scan of both patterns per channel
+    nats.subscribe("a/#", lambda m: seen.append("#" + m["channel"]))
+    scans.clear()
+    nats.publish("x", env("a/1"))
+    assert seen[-2:] == ["a/1", "#a/1"]
+    assert len(scans) == 3  # the cache was cleared by subscribe
+
+
+def test_client_import_does_not_load_pyspark():
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        "import node_cdc_nats_spark.client, node_cdc_nats_spark.sources.nats\n"
+        "print(sorted(m for m in sys.modules if m.split('.')[0] == 'pyspark'))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True,
+        check=True, env=dict(os.environ, PYTHONPATH=root),
+    )
+    assert out.stdout.strip() == "[]"

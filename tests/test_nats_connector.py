@@ -266,6 +266,75 @@ def test_reconnect_mid_frame_resynchronizes():
     server.close()
 
 
+class ChunkedSock:
+    """Fake socket serving a fixed byte stream in the given chunk sizes and
+    recording everything the client sends."""
+
+    def __init__(self, stream: bytes, sizes):
+        self.chunks = []
+        pos = 0
+        for size in sizes:
+            if pos >= len(stream):
+                break
+            self.chunks.append(stream[pos : pos + size])
+            pos += size
+        self.chunks.reverse()
+        self.sent = bytearray()
+
+    def recv(self, n):
+        chunk = self.chunks.pop() if self.chunks else b""
+        assert len(chunk) <= n
+        return chunk
+
+    def sendall(self, data):
+        self.sent += data
+
+    def close(self):
+        pass
+
+
+def test_chunk_boundaries_do_not_change_parsing(monkeypatch):
+    """One protocol stream, split at random chunk boundaries from 1 B to
+    64 KB: every split yields the same (subject, payload) sequence and
+    answers every PING with exactly one PONG. Payloads of 0 B, 200 B and
+    4 KB contain CRLF bytes, so only the length header can delimit them."""
+    import random
+
+    rng = random.Random(7)
+    frames, parts = [], [b'INFO {"server_id":"fake"}\r\n']
+    pings = 0
+    for i in range(60):
+        kind = i % 6
+        if kind == 3:
+            parts.append(b"PING\r\n")
+            pings += 1
+        elif kind == 4:
+            parts.append(b"+OK\r\n" if i % 12 == 4 else b'INFO {"max_payload":1048576}\r\n')
+        else:
+            size = (0, 200, 4096)[i % 3]
+            payload = bytes(rng.getrandbits(8) for _ in range(size)).replace(b"\x00", b"\r\n")
+            subject = f"cdc.s{i}"
+            frames.append((subject, payload))
+            parts.append(f"MSG {subject} 1 {len(payload)}\r\n".encode() + payload + b"\r\n")
+    stream = b"".join(parts)
+
+    def splits():
+        yield [65536] * 2
+        yield [1] * len(stream)
+        for top in (7, 300, 5000, 65536):
+            yield [rng.randint(1, top) for _ in range(len(stream))]
+
+    for sizes in splits():
+        sock = ChunkedSock(stream, sizes)
+        monkeypatch.setattr(socket, "create_connection", lambda addr, timeout=None: sock)
+        c = NatsClient("nats://fake:4222", reconnect=False)
+        got = [c.next_msg() for _ in frames]
+        assert got == frames
+        assert not sock.chunks  # the whole stream was consumed
+        assert sock.sent.count(b"PONG\r\n") == pings
+        c.close()
+
+
 def test_send_retry_failure_is_conn_closed(broker):
     """If the freshly redialed socket dies too, _send must surface the
     documented NatsError(CONN_CLOSED) contract, not a raw OSError
@@ -692,3 +761,41 @@ def test_simple_reader_drains_multi_frame_segment(spark, tmp_path):
     assert drain() == sorted(f"m{i}" for i in range(9))
     # restart on the same checkpoint: cursor at segment end → no duplicates
     assert drain() == sorted(f"m{i}" for i in range(9))
+
+
+def test_sink_varint_gate_matches_encode_cdcmsg(tmp_path, monkeypatch):
+    """The nats_cdc sink omits a varint field exactly when encode_cdcmsg
+    does, i.e. when int(value) is 0 — also for values such as 0.5 whose
+    truthiness and int() disagree."""
+    import pyarrow as pa
+    import pyspark
+
+    from node_cdc_nats_spark.sources.nats import _make_datasource_cls, read_frames
+
+    class Ctx:
+        def taskAttemptId(self):
+            return 1
+
+    monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(lambda: Ctx()))
+    qos = [0.5, 1.9, 0.0, 3.0, 0.99]
+    retain = [0.25, 1.0, 0.0, 0.9, 2.0]
+    n = len(qos)
+    batch = pa.RecordBatch.from_pydict({
+        "publisher": ["nms"] * n,
+        "channel": [f"c/{i}" for i in range(n)],
+        "contentType": ["json"] * n,
+        "protocol": ["http"] * n,
+        "reply": [""] * n,
+        "QOS": qos,
+        "retain": retain,
+        "payload": [f"m{i}".encode() for i in range(n)],
+    })
+    spool = tmp_path / "spool"
+    source = _make_datasource_cls()({"spool": str(spool)})
+    source.streamWriter(None, False).write(iter([batch]))
+    (seg,) = spool.iterdir()
+    got = [env for _, env in read_frames(str(seg))]
+    assert got == [
+        encode_cdcmsg("nms", f"c/{i}", "json", "http", "", qos[i], retain[i], f"m{i}".encode())
+        for i in range(n)
+    ]
